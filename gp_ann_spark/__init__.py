@@ -24,3 +24,10 @@ pandas/Arrow UDFs (no per-row Python UDFs anywhere).
 """
 
 __version__ = "0.1.0"
+
+# Engine UDFs import this package when they are unpickled on a worker, so
+# this reaches every Python worker (see _pyworker and README
+# "Python-boundary fixed cost").
+from gp_ann_spark import _pyworker
+
+_pyworker.install()

@@ -96,6 +96,22 @@ MAX_QUERY_BLOCK_BYTES = int(
 )
 
 
+# rows the query-size probe may collect: one block's worth of vectors up to
+# this width (8192 rows at the 64 MB default)
+_PROBE_WIDTH = 1024
+
+
+def _query_block(pdf: pd.DataFrame, q_id_col: str, q_vec_col: str):
+    if pdf[q_vec_col].isna().any():
+        # loud, like the unchunked np.stack would have been — NOT a silent
+        # empty or partial result
+        raise ValueError(f"{q_vec_col} contains NULL vectors; cannot score routing points")
+    return (
+        pdf[q_id_col].to_numpy().astype(np.int64),
+        np.stack(pdf[q_vec_col].to_numpy()).astype(np.float64),
+    )
+
+
 def _bounded_query_batches(queries: DataFrame, q_id_col: str, q_vec_col: str):
     """Collect the query side to the driver in bounded blocks.
 
@@ -103,40 +119,36 @@ def _bounded_query_batches(queries: DataFrame, q_id_col: str, q_vec_col: str):
     ``MAX_QUERY_BLOCK_BYTES`` (env ``SPARK_GRAFT_MAX_QUERY_BLOCK_BYTES``).
     The scoring kernels are per-query independent and both distributed
     paths finish with a per-query window/aggregation, so running them per
-    block and unioning is bit-identical to one unchunked pass. One block
-    (the common evaluation-batch case) keeps the old single-collect plan;
-    the multi-block path pays one routing-table scan per block — callers
-    with an expensive routing plan should checkpoint it first (they
-    already must for the size probe, see ``score_routing_points``).
+    block and unioning is bit-identical to one unchunked pass. A NULL
+    vector in any row raises ``ValueError``.
+
+    One ``limit`` probe of at most one block (at width ``_PROBE_WIDTH``)
+    decides: if it returns the whole query set — the common evaluation-batch
+    case — that is the only job. Otherwise a ``count`` sizes hash blocks at
+    the probed width and each block is collected on its own; that path pays
+    one routing-table scan per block — callers with an expensive routing
+    plan should checkpoint it first (they already must for the size probe,
+    see ``score_routing_points``).
     """
     q = queries.select(q_id_col, q_vec_col)
-    first = q.select(q_vec_col).first()
-    if first is None:  # empty query set
+    probe_rows = max(1, MAX_QUERY_BLOCK_BYTES // (8 * _PROBE_WIDTH))
+    head = q.limit(probe_rows + 1).toPandas()
+    if len(head) == 0:  # empty query set
         yield np.zeros(0, dtype=np.int64), np.zeros((0, 1))
         return
-    if first[0] is None:
-        # loud, like the unchunked np.stack would have been — NOT a silent
-        # empty result for a query set that merely starts with a null vector
-        raise ValueError(f"{q_vec_col} contains NULL vectors; cannot score routing points")
-    d = max(len(first[0]), 1)
-    n = q.count()
-    block_rows = max(1, MAX_QUERY_BLOCK_BYTES // (8 * d))
-    n_blocks = max(1, -(-n // block_rows))
-    if n_blocks == 1:
-        pdf = q.toPandas()
-        yield (
-            pdf[q_id_col].to_numpy().astype(np.int64),
-            np.stack(pdf[q_vec_col].to_numpy()).astype(np.float64),
-        )
+    qids, Q = _query_block(head, q_id_col, q_vec_col)
+    block_rows = max(1, MAX_QUERY_BLOCK_BYTES // (8 * max(Q.shape[1], 1)))
+    if len(head) <= probe_rows:
+        for s in range(0, len(qids), block_rows):
+            yield qids[s : s + block_rows], Q[s : s + block_rows]
         return
+    del head, qids, Q
+    n_blocks = max(1, -(-q.count() // block_rows))
     for i in range(n_blocks):
         pdf = q.where(F.pmod(F.xxhash64(F.col(q_id_col)), F.lit(n_blocks)) == i).toPandas()
-        if len(pdf) == 0:
-            continue
-        yield (
-            pdf[q_id_col].to_numpy().astype(np.int64),
-            np.stack(pdf[q_vec_col].to_numpy()).astype(np.float64),
-        )
+        if len(pdf):
+            yield _query_block(pdf, q_id_col, q_vec_col)
+
 
 _PAD_HASH = np.int64((1 << 62))  # sorts after every real xxhash64 tie-key
 

@@ -3,6 +3,9 @@
 Single place where scale-relevant knobs live. Tested on ``local[N]``; the
 same settings are what we would submit with ``spark-submit --py-files`` on a
 real cluster (AQE, Arrow, adaptive skew-join handling).
+
+The per-task fixed cost of Python workers is cut elsewhere, without a
+setting: see README "Python-boundary fixed cost" (``gp_ann_spark._pyworker``).
 """
 
 from __future__ import annotations

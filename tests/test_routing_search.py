@@ -451,6 +451,31 @@ def test_score_distributed_chunked_queries_bit_identical(spark, score_fixture, m
         assert a == b, nv
 
 
+def test_query_blocks_one_block_is_one_job(spark, score_fixture):
+    """A query set that fits one block is collected by the size probe
+    itself: one Spark job, no separate first()/count()/collect passes."""
+    _, qs, Q = score_fixture
+    dag = spark.sparkContext._jsc.sc().dagScheduler()
+    j0 = dag.nextJobId()
+    blocks = list(RT._bounded_query_batches(qs, "query_id", "vec"))
+    assert dag.nextJobId() - j0 == 1
+    assert len(blocks) == 1
+    qids, got = blocks[0]
+    np.testing.assert_array_equal(got[np.argsort(qids)], Q)
+
+
+@pytest.mark.parametrize("block_bytes", [None, 512])
+def test_query_blocks_null_vector_in_any_row_raises(spark, monkeypatch, block_bytes):
+    """A NULL query vector in a middle row raises on both the one-block
+    probe path and the multi-block path (d=8, 512 B → 8 rows per block)."""
+    if block_bytes is not None:
+        monkeypatch.setattr(RT, "MAX_QUERY_BLOCK_BYTES", block_bytes)
+    rows = [(i, None if i == 20 else [float(i)] * 8) for i in range(40)]
+    qs = spark.createDataFrame(rows, "query_id long, vec array<double>").coalesce(1)
+    with pytest.raises(ValueError, match="NULL vectors"):
+        list(RT._bounded_query_batches(qs, "query_id", "vec"))
+
+
 def test_score_overflow_all_duplicates_vectorized(spark):
     """Adversarial mass-duplicate routing table: every row is the same
     vector, so EVERY query row overflows the preselect margin in every

@@ -1,23 +1,23 @@
 """Package gp_ann_spark for `spark-submit --py-files` (BASELINE.json
 north_rule: "run via spark-submit --py-files on a multi-executor cluster").
 
-    python tools/make_pyfiles.py          # → dist/gp_ann_spark.zip
+    python tools/make_pyfiles.py [out.zip]   # default: dist/gp_ann_spark.zip
     spark-submit --master local[8] --py-files dist/gp_ann_spark.zip \
-        tools/submit_smoke.py /root/testdata/sf0.001
+        tools/submit_smoke.py <sf_dir>
 """
 
 from __future__ import annotations
 
 import os
+import sys
 import zipfile
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
-def main() -> str:
-    dist = os.path.join(ROOT, "dist")
-    os.makedirs(dist, exist_ok=True)
-    out = os.path.join(dist, "gp_ann_spark.zip")
+def main(out: str | None = None) -> str:
+    out = os.path.abspath(out or os.path.join(ROOT, "dist", "gp_ann_spark.zip"))
+    os.makedirs(os.path.dirname(out), exist_ok=True)
     pkg = os.path.join(ROOT, "gp_ann_spark")
     with zipfile.ZipFile(out, "w", zipfile.ZIP_DEFLATED) as z:
         for dirpath, _, files in os.walk(pkg):
@@ -32,4 +32,4 @@ def main() -> str:
 
 
 if __name__ == "__main__":
-    main()
+    main(sys.argv[1] if len(sys.argv) > 1 else None)
